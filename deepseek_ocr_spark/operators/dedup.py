@@ -25,19 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deepseek_ocr_spark.pipeline.session import spread_input
+
 SHINGLE_WIDTH = 3
-
-
-def spread_input(df: DataFrame) -> DataFrame:
-    """Spread a narrow scan across the cluster before a map-heavy projection
-    (same policy as extract_job.spread_input): a well-laid-out production
-    table has thousands of splits and this is a no-op; the sandbox's
-    single-file driver parquet would otherwise run the whole zero-shuffle
-    sketch pipeline in ONE task (observed)."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        return df.repartition(par)
-    return df
 
 
 def shingles_array(text_col: str = "text") -> F.Column:

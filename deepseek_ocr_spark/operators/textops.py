@@ -735,11 +735,8 @@ def doc_fingerprint(docs: DataFrame) -> DataFrame:
     holds the text); no explode, no distinct shuffle, no window sort.
     (History: v1 used collect_list over an exploded shuffle — unbounded agg
     buffers; v2 a row_number window — bounded but still a shuffle + sort.)"""
-    from deepseek_ocr_spark.operators.dedup import (
-        SHINGLE_WIDTH,
-        shingles_array,
-        spread_input,
-    )
+    from deepseek_ocr_spark.operators.dedup import SHINGLE_WIDTH, shingles_array
+    from deepseek_ocr_spark.pipeline.session import spread_input
 
     # token-count gate, not size(shingles) — see minhash_signatures note
     has_shingles = F.size(F.split(F.col("text"), " ")) >= SHINGLE_WIDTH

@@ -26,7 +26,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from deepseek_ocr_spark.config import BASE_SIZE, IMAGE_SIZE, MAX_CROPS, MIN_CROPS
+from deepseek_ocr_spark.config import (
+    BASE_SIZE,
+    DEFAULT_CONFIG,
+    IMAGE_SIZE,
+    MAX_CROPS,
+    MIN_CROPS,
+    EngineConfig,
+)
 from deepseek_ocr_spark.kernels.tiling import candidate_ratios
 from deepseek_ocr_spark.kernels.tokens import grid_side
 
@@ -101,6 +108,50 @@ def with_tile_plan(
         F.when(bypass, F.lit(1)).otherwise(F.col("b.i")).alias("nw"),
         F.when(bypass, F.lit(1)).otherwise(F.col("b.j")).alias("nh"),
     )
+
+
+def tile_plan_expr(width: Column, height: Column, cfg: EngineConfig = DEFAULT_CONFIG) -> Column:
+    """(nw, nh) via ``F.aggregate`` over the 13-candidate array — the
+    reference argmin scan (image_process.py:11-25) translated literally into
+    a whole-stage-codegen fold: no shuffle, no UDF, no join. The per-row
+    counterpart of ``with_tile_plan``.
+
+    Returns struct(nw, nh).
+    """
+    cands = F.array(
+        *[
+            F.struct(F.lit(i).alias("i"), F.lit(j).alias("j"))
+            for (i, j) in candidate_ratios(cfg.min_crops, cfg.max_crops)
+        ]
+    )
+    aspect = width.cast("double") / height.cast("double")
+    area = (width * height).cast("double")
+    half_sq = F.lit(0.5 * cfg.image_size * cfg.image_size)
+
+    def step(acc, c):
+        diff = F.abs(aspect - c["i"].cast("double") / c["j"].cast("double"))
+        better = diff < acc["diff"]
+        tie_takes = (diff == acc["diff"]) & (area > half_sq * c["i"] * c["j"])
+        return F.when(
+            better | tie_takes,
+            F.struct(diff.alias("diff"), c["i"].alias("nw"), c["j"].alias("nh")),
+        ).otherwise(acc)
+
+    folded = F.aggregate(
+        cands,
+        F.struct(
+            F.lit(float("inf")).alias("diff"),
+            F.lit(1).alias("nw"),
+            F.lit(1).alias("nh"),
+        ),
+        step,
+    )
+    bypass = (width <= cfg.image_size) & (height <= cfg.image_size)
+    if not cfg.crop_mode:
+        bypass = F.lit(True)
+    return F.when(
+        bypass, F.struct(F.lit(1).alias("nw"), F.lit(1).alias("nh"))
+    ).otherwise(F.struct(folded["nw"].alias("nw"), folded["nh"].alias("nh")))
 
 
 def vision_tokens_col(

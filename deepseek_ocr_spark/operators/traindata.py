@@ -18,7 +18,7 @@ Scale shapes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # Conservative patterns with identical semantics in Java regex (Spark) and
@@ -353,6 +353,19 @@ def dsir_fit(
     )
 
 
+def micro_round4(micro: Column) -> Column:
+    """Integer micro-units → double rounded to 4 decimals exactly as
+    DuckDB's ``round(CAST(micro AS DOUBLE) / 1000000.0, 4)``: half away
+    from zero on the binary double ``x·1e4``, then ``/1e4``, keeping the
+    sign of a zero result. ``F.round(x, 4)`` rounds the decimal string of
+    x half-up instead: 748450/1e6 is 0.7485 there and 0.7484 in DuckDB.
+    Scale-0 rounding agrees in both engines (an exact .5 is representable),
+    and Spark's round drops the sign of zero, hence the abs/negate."""
+    q = micro.cast("double") / F.lit(1000000.0) * F.lit(10000.0)
+    r = F.round(F.abs(q)) / F.lit(10000.0)
+    return F.when(q < 0, -r).otherwise(r)
+
+
 def dsir_scores(
     docs: DataFrame,
     target_lang: str = "en",
@@ -400,9 +413,7 @@ def dsir_scores(
         .select(
             "doc_id",
             "n_feats",
-            F.round(F.col("_sq").cast("double") / F.lit(1000000.0), 4).alias(
-                "dsir_score"
-            ),
+            micro_round4(F.col("_sq")).alias("dsir_score"),
         )
     )
 

@@ -5,180 +5,45 @@ run_dpsk_ocr_pdf.py end-to-end flow, SURVEY.md §3) as one Spark DataFrame
 plan over ``documents(url, warc_ts, html, text, lang)``:
 
   scan (column-pruned: url+html only)
-    → [auto] spread repartition by url        [only when the input has fewer
+    → [auto] round-robin input spread          [only when the input has fewer
        scan splits than the cluster parallelism — a real 100 TB table has
        thousands of splits and skips this shuffle entirely]
-    → FUSED mapInPandas split+extract         [O-2 fan-out + O-38 kernel in
-       ONE Python stage: page html never crosses the Arrow boundary
-       (measured: shipping page_html through a shuffle + second Arrow hop
-       cost as much as extraction); iterator batches = the continuous-
-       batching analog; per-worker kernel singleton]
-    → tile plan as a zero-shuffle fold expression over the 13-candidate
-      literal array [O-10/O-11; the broadcast-join+window formulation lives
-      in operators/tiling_relational.py and is verified to agree]
-    → vision-token column expression          [O-13]
-    → relational EOS keep-flag + strip        [O-19/O-33: contains + replace]
-    → ordered per-url assembly aggregation    [O-24: array_sort(collect_list)
-       of when(keep, …) — conditional collect drops SKIP_REPEAT pages AND
-       keeps all-dropped urls, so no all-urls join is ever needed]
-    → doc-level finalize UDF                  [O-26/O-27 jdx ordinals +
-       O-30…O-36 cascade + span parse + token count, one pass per doc]
-    → metrics / lineage columns               [O-25]
+    → ONE mapInPandas, one output row per input row:
+       split_pages → extract_page               [O-2 fan-out + O-38 kernel]
+       → SKIP_REPEAT keep + EOS strip           [O-19/O-33]
+       → tile plan + vision tokens              [O-10/O-11/O-13]
+       → span parse + pixel rescale             [O-30…O-32]
+       → mode cascade with kept-page jdx        [O-26/O-27, O-30…O-36]
+       → ordered page fold + text-token count   [O-24]
+      (iterator batches = the continuous-batching analog; per-worker kernel
+      singleton)
+    → compression ratio + sha2 digest           [JVM projections, O-25]
 
-Shuffle budget — ONE exchange end-to-end on a well-laid-out input (the url
-shuffle of the assembly groupBy), plus the optional input-spread
-repartition for few-split inputs. No windows, no joins, two Python stages
-(a filter on the UDF column would have double-evaluated the kernel — hence
-the keep-flag design). Projection (url, html) prunes at the scan. Skew:
-work per doc is bounded (≤~40 pages × the 8192-token cap), so doc-granular
-distribution evens out at thousands of docs per task; AQE skew-join
-handling stays on for the relational operators.
+A document's pages never leave the Python worker that split them, so there
+is nothing to regroup: no url shuffle, and the page text crosses the Arrow
+boundary once, as the folded row. Because the fold runs per input row,
+duplicate and NULL urls each keep their own output row, exactly like the
+oracle.
+
+Shuffle budget — ZERO exchanges on a well-split input, one round-robin
+spread for a few-split input. One Python stage, no windows, no joins.
+Skew: work per doc is bounded (≤~40 pages × the 8192-token cap), so doc-
+granular distribution evens out at thousands of docs per task; the giant-
+document regime has its own page-granular lane (``extract_documents_paged``)
+that shares the fold.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from deepseek_ocr_spark.config import EOS_TOKEN, EngineConfig, DEFAULT_CONFIG
-from deepseek_ocr_spark.kernels.tiling import candidate_ratios
-from deepseek_ocr_spark.operators.tiling_relational import vision_tokens_col
-
-# ---------------------------------------------------------------------------
-# Stage 1 — page split (mapInPandas; cheap, streaming)
-# ---------------------------------------------------------------------------
-
-PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("page_no", T.IntegerType()),
-        T.StructField("seq", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("page_html", T.StringType()),
-        T.StructField("degenerate", T.BooleanType()),
-    ]
-)
-
-
-def _split_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from deepseek_ocr_spark.kernels.extract import split_pages
-
-    for pdf in batches:
-        out = {k: [] for k in ("url", "page_no", "seq", "width", "height", "page_html", "degenerate")}
-        for url, html in zip(pdf["url"], pdf["html"]):
-            # null/bytes normalization happens inside the shared kernel
-            for seq, rec in enumerate(split_pages(html)):
-                out["url"].append(url)
-                out["page_no"].append(rec.page_no)
-                out["seq"].append(seq)
-                out["width"].append(rec.width)
-                out["height"].append(rec.height)
-                out["page_html"].append(rec.html)
-                out["degenerate"].append(rec.degenerate)
-        yield pd.DataFrame(out)
-
-
-def split_to_pages(docs: DataFrame) -> DataFrame:
-    """documents → one row per page (the PDF-render fan-out analog,
-    reference pdf.py:64-95). Standalone op; the hot pipeline uses the fused
-    split+extract stage below so page_html never crosses the Arrow boundary."""
-    return docs.select("url", "html").mapInPandas(_split_batches, PAGES_SCHEMA)
-
-
-# Fused split+extract: one Python stage emitting extracted page rows. The
-# page html stays inside the Python worker (measured: shipping page_html
-# through a shuffle + a second Arrow hop cost as much as extraction itself).
-EXTRACTED_PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("page_no", T.IntegerType()),
-        T.StructField("seq", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("raw", T.StringType()),
-    ]
-)
-
-
-def _split_extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    kernel = _get_kernel()
-    for pdf in batches:
-        out = {k: [] for k in ("url", "page_no", "seq", "width", "height", "raw")}
-        for url, html in zip(pdf["url"], pdf["html"]):
-            # null/bytes normalization happens inside the shared kernel
-            for seq, rec in enumerate(kernel.split_pages(html)):
-                out["url"].append(url)
-                out["page_no"].append(rec.page_no)
-                out["seq"].append(seq)
-                out["width"].append(rec.width)
-                out["height"].append(rec.height)
-                out["raw"].append(kernel.extract_page(rec))
-        yield pd.DataFrame(out)
-
-
-def split_and_extract(docs: DataFrame) -> DataFrame:
-    """documents → extracted page rows (url, page_no, width, height, raw)."""
-    return docs.select("url", "html").mapInPandas(
-        _split_extract_batches, EXTRACTED_PAGES_SCHEMA
-    )
-
-
-# ---------------------------------------------------------------------------
-# Stage 2 — tile plan as a zero-shuffle fold over the candidate literal array
-# ---------------------------------------------------------------------------
-
-
-def tile_plan_expr(width: Column, height: Column, cfg: EngineConfig = DEFAULT_CONFIG) -> Column:
-    """(nw, nh) via ``F.aggregate`` over the 13-candidate array — the
-    reference argmin scan (image_process.py:11-25) translated literally into
-    a whole-stage-codegen fold: no shuffle, no UDF, no join.
-
-    Returns struct(nw, nh).
-    """
-    cands = F.array(
-        *[
-            F.struct(F.lit(i).alias("i"), F.lit(j).alias("j"))
-            for (i, j) in candidate_ratios(cfg.min_crops, cfg.max_crops)
-        ]
-    )
-    aspect = width.cast("double") / height.cast("double")
-    area = (width * height).cast("double")
-    half_sq = F.lit(0.5 * cfg.image_size * cfg.image_size)
-
-    def step(acc, c):
-        diff = F.abs(aspect - c["i"].cast("double") / c["j"].cast("double"))
-        better = diff < acc["diff"]
-        tie_takes = (diff == acc["diff"]) & (area > half_sq * c["i"] * c["j"])
-        return F.when(
-            better | tie_takes,
-            F.struct(diff.alias("diff"), c["i"].alias("nw"), c["j"].alias("nh")),
-        ).otherwise(acc)
-
-    folded = F.aggregate(
-        cands,
-        F.struct(
-            F.lit(float("inf")).alias("diff"),
-            F.lit(1).alias("nw"),
-            F.lit(1).alias("nh"),
-        ),
-        step,
-    )
-    bypass = (width <= cfg.image_size) & (height <= cfg.image_size)
-    if not cfg.crop_mode:
-        bypass = F.lit(True)
-    return F.when(
-        bypass, F.struct(F.lit(1).alias("nw"), F.lit(1).alias("nh"))
-    ).otherwise(F.struct(folded["nw"].alias("nw"), folded["nh"].alias("nh")))
-
-
-# ---------------------------------------------------------------------------
-# Stage 3 — extraction kernel (iterator pandas UDF, per-executor singleton)
-# ---------------------------------------------------------------------------
+from deepseek_ocr_spark.config import EngineConfig, DEFAULT_CONFIG
+from deepseek_ocr_spark.pipeline.session import spread_input
 
 _KERNEL = None  # per-Python-worker singleton (the one-replica-per-executor pattern)
 
@@ -193,10 +58,6 @@ def _get_kernel():
         _KERNEL = kernel_mod
     return _KERNEL
 
-
-# ---------------------------------------------------------------------------
-# Stage 3 — doc-level finalize (cascade + assembly + spans + token count)
-# ---------------------------------------------------------------------------
 
 # Spans carry both the 0-999 virtual-grid coords (the model grammar) and the
 # pixel-rescaled box (O-32, image.py:97-103) — the pixel coords feed the
@@ -219,196 +80,165 @@ DOC_SPAN_TYPE = T.ArrayType(
     )
 )
 
-FINALIZE_TYPE = T.StructType(
+# Kept-page dims in assembly order, so downstream sinks (layouts_table O-7)
+# can rebuild per-page canvases without re-running the split.
+PAGE_DIMS_TYPE = T.ArrayType(
+    T.StructType(
+        [
+            T.StructField("page_no", T.IntegerType()),
+            T.StructField("width", T.IntegerType()),
+            T.StructField("height", T.IntegerType()),
+        ]
+    ),
+    containsNull=False,
+)
+
+FOLDED_SCHEMA = T.StructType(
     [
+        T.StructField("url", T.StringType()),
         T.StructField("raw_text", T.StringType()),
         T.StructField("text", T.StringType()),
         T.StructField("spans", DOC_SPAN_TYPE),
+        T.StructField("page_dims", PAGE_DIMS_TYPE, nullable=False),
+        T.StructField("n_pages", T.IntegerType()),
+        T.StructField("n_vision_tokens", T.LongType()),
         T.StructField("n_text_tokens", T.LongType()),
     ]
 )
+_FOLDED_COLS = [f.name for f in FOLDED_SCHEMA.fields]
 
 
-def make_finalize_udf(mode: str):
-    """Doc-level finalize: kept pages (already page-ordered) → cascade per
-    page with jdx = position (pdf.py:285-320), assembly with the page
-    separator, span parse, text-token count. Mirrors the oracle loop
-    exactly — same kernel functions, same iteration order."""
+def fold_document(pages: Iterable[tuple[int, int, int, str]], cfg: EngineConfig) -> tuple:
+    """One document's extracted pages, in page order, as (page_no, width,
+    height, raw) → the folded columns of FOLDED_SCHEMA after ``url``.
 
-    @F.pandas_udf(FINALIZE_TYPE)
-    def finalize_udf(kept_pages: pd.Series) -> pd.DataFrame:
-        from deepseek_ocr_spark.kernels import postprocess as pp
-        from deepseek_ocr_spark.kernels.tokens import num_text_tokens
+    SKIP_REPEAT gate, tile plan + vision tokens of every kept page, span
+    parse, the mode cascade with the kept-page ordinal jdx (pdf.py:285,320),
+    assembly with the page separator and the text-token count — the same
+    kernel functions in the same order as the oracle loop."""
+    from deepseek_ocr_spark.kernels import postprocess as pp
+    from deepseek_ocr_spark.kernels.tiling import tile_plan
+    from deepseek_ocr_spark.kernels.tokens import num_text_tokens, num_vision_tokens
 
-        raw_out, text_out, spans_out, ntt_out = [], [], [], []
-        for pages in kept_pages:
-            raw_parts, clean_parts, spans = [], [], []
-            for jdx, page in enumerate(pages if pages is not None else []):
-                content = page["content"]
-                raw_parts.append(content)
-                w, h = int(page["width"]), int(page["height"])
-                for s in pp.parse_spans(content):
-                    px1, py1, px2, py2 = pp.rescale_box(
-                        s["x1"], s["y1"], s["x2"], s["y2"], w, h
-                    )
-                    spans.append(
-                        (
-                            s["label"], s["x1"], s["y1"], s["x2"], s["y2"],
-                            px1, py1, px2, py2,
-                            int(page["page_no"]), s["ord"],
-                        )
-                    )
-                if mode == "eval":
-                    clean_parts.append(pp.clean_page_eval(content))
-                elif mode == "image":
-                    clean_parts.append(pp.clean_page_image(content))
-                else:
-                    clean_parts.append(pp.clean_page_pdf(content, jdx))
-            text = pp.assemble_pages(clean_parts)
-            raw_out.append(pp.assemble_pages(raw_parts))
-            text_out.append(text)
-            spans_out.append(spans)
-            ntt_out.append(num_text_tokens(text))
-        return pd.DataFrame(
-            {
-                "raw_text": raw_out,
-                "text": text_out,
-                "spans": spans_out,
-                "n_text_tokens": pd.Series(ntt_out, dtype="int64"),
-            }
+    raw_parts, clean_parts, spans, page_dims = [], [], [], []
+    vision_tokens = 0
+    for page_no, width, height, raw in pages:
+        keep, content = pp.eos_keep_and_strip(raw, cfg.skip_repeat)
+        if not keep:
+            continue
+        jdx = len(raw_parts)
+        page_dims.append((page_no, width, height))
+        nw, nh = tile_plan(
+            width, height, cfg.crop_mode, cfg.image_size, cfg.min_crops, cfg.max_crops
         )
-
-    return finalize_udf
-
-
-# ---------------------------------------------------------------------------
-# The full plan
-# ---------------------------------------------------------------------------
-
-
-def extract_documents(
-    docs: DataFrame,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    page_partitions: int | None = None,
-    spread_input: bool | None = None,
-) -> DataFrame:
-    """documents → extracted(url, text, raw_text, spans, n_pages,
-    n_vision_tokens, n_text_tokens, compression_ratio, digest).
-
-    Byte-identical per url to ``oracle.runner.extract_url`` (pytest gate).
-
-    ``spread_input``: repartition documents by url before the fused
-    split+extract stage. Auto (None): only when the input has fewer
-    partitions than the cluster's parallelism — a well-laid-out 100 TB table
-    already has thousands of scan splits, so the shuffle of html bytes is
-    skipped; a single-file sandbox input gets spread so the Python stage
-    isn't single-tasked. Work per doc is bounded (≤~40 pages × the 8192
-    output-token cap), so doc-granularity distribution is skew-safe at
-    thousands of docs per task.
-    """
-    spark = docs.sparkSession
-    if page_partitions is None:
-        page_partitions = spark.sparkContext.defaultParallelism
-
-    src = docs.select("url", "html")
-    if spread_input is None:
-        spread_input = src.rdd.getNumPartitions() < page_partitions
-    if spread_input:
-        src = src.repartition(page_partitions, "url")
-
-    pages = split_and_extract(src)
-
-    return _assemble_pages(pages, cfg, page_partitions)
-
-
-def _assemble_pages(pages: DataFrame, cfg: EngineConfig, page_partitions: int) -> DataFrame:
-    """Shared downstream: extracted page rows (url, page_no, width, height,
-    raw) → final extracted table. Used by both the fused doc-granular path
-    and the page-granular giant-doc path."""
-    plan = tile_plan_expr(F.col("width"), F.col("height"), cfg)
-    pages = pages.withColumn("nw", plan["nw"]).withColumn("nh", plan["nh"])
-    pages = pages.withColumn(
-        "vis_tokens", vision_tokens_col(F.col("nw"), F.col("nh"), cfg.base_size, cfg.image_size)
-    )
-
-    # O-19 SKIP_REPEAT gate as a flag, not a filter: a filter directly on a
-    # Python-UDF column makes Catalyst evaluate the UDF twice (once for the
-    # predicate, once for the projection — observed as two ArrowEvalPython
-    # nodes). The flag rides into the aggregation instead; conditional
-    # collect (when(keep, ...) → NULL → dropped by collect_list) both
-    # excludes dropped pages and keeps all-dropped urls in the output with
-    # empty text — zero extra joins, zero re-evaluation.
-    keep = F.col("raw").contains(F.lit(EOS_TOKEN)) if cfg.skip_repeat else F.lit(True)
-    pages = pages.withColumn("keep", keep).withColumn(
-        "content", F.replace(F.col("raw"), F.lit(EOS_TOKEN), F.lit(""))
-    )
-
-    # O-24/O-26/O-27 in ONE url-shuffle: sort-agg the kept pages in page
-    # order; the kept-page ordinal jdx (pdf.py:285,320), the per-page cascade
-    # (O-30…O-36), assembly, and text-token count all happen in a single
-    # doc-level finalize UDF over the collected array — page order is already
-    # restored inside the aggregate, so no separate window pass (and no
-    # second url exchange: ArrowEvalPython between a window and a groupBy
-    # would forget the hash partitioning and force one).
-    # Explicit url repartition (REPARTITION_BY_NUM) rather than letting the
-    # groupBy add an ENSURE_REQUIREMENTS exchange: AQE's byte-based
-    # coalescing shrank the post-shuffle stage to 1 task (observed in the
-    # event log), serializing the Python finalize stage — partition-count
-    # decisions for CPU-bound UDF stages must not be byte-based. No partial-
-    # agg loss: collect_list partials don't reduce data anyway.
-    pages = pages.repartition(page_partitions, "url")
-    assembled = pages.groupBy("url").agg(
-        F.array_sort(
-            # sort key (page_no, seq): seq is the split-order position, so
-            # duplicate page_no values keep document order exactly like the
-            # oracle's stable sort — struct comparison must never fall
-            # through to content
-            F.collect_list(
-                F.when(
-                    F.col("keep"),
-                    F.struct("page_no", "seq", "content", "width", "height"),
+        vision_tokens += num_vision_tokens(nw, nh, cfg.base_size, cfg.image_size)
+        raw_parts.append(content)
+        for s in pp.parse_spans(content):
+            px1, py1, px2, py2 = pp.rescale_box(
+                s["x1"], s["y1"], s["x2"], s["y2"], width, height
+            )
+            spans.append(
+                (
+                    s["label"], s["x1"], s["y1"], s["x2"], s["y2"],
+                    px1, py1, px2, py2, page_no, s["ord"],
                 )
             )
-        ).alias("kept_pages"),
-        F.sum(F.col("keep").cast("int")).cast("int").alias("n_pages"),
-        F.sum(F.when(F.col("keep"), F.col("vis_tokens")).otherwise(F.lit(0)))
-        .cast("bigint")
-        .alias("n_vision_tokens"),
+        if cfg.mode == "eval":
+            clean_parts.append(pp.clean_page_eval(content))
+        elif cfg.mode == "image":
+            clean_parts.append(pp.clean_page_image(content))
+        else:
+            clean_parts.append(pp.clean_page_pdf(content, jdx))
+    text = pp.assemble_pages(clean_parts)
+    return (
+        pp.assemble_pages(raw_parts),
+        text,
+        spans,
+        page_dims,
+        len(raw_parts),
+        vision_tokens,
+        num_text_tokens(text),
     )
 
-    fin = make_finalize_udf(cfg.mode)
-    result = (
-        assembled.withColumn("fin", fin(F.col("kept_pages")))
-        .select(
-            "url",
-            F.col("fin.raw_text").alias("raw_text"),
-            F.col("fin.text").alias("text"),
-            F.col("fin.spans").alias("spans"),
-            # kept-page dims ride along (already sorted by page order) so
-            # downstream sinks (layouts_table O-7) can rebuild per-page
-            # canvases without re-running the split — pure projection, free
-            F.transform(
-                "kept_pages",
-                lambda x: F.struct(
-                    x["page_no"].alias("page_no"),
-                    x["width"].alias("width"),
-                    x["height"].alias("height"),
-                ),
-            ).alias("page_dims"),
-            "n_pages",
-            "n_vision_tokens",
-            F.col("fin.n_text_tokens").alias("n_text_tokens"),
-        )
-    )
-    result = result.withColumn(
+
+def _folded_frame(rows: list[tuple]) -> pd.DataFrame:
+    return pd.DataFrame.from_records(rows, columns=_FOLDED_COLS)
+
+
+def _with_metrics(folded: DataFrame) -> DataFrame:
+    """The two JVM projections over the folded rows (O-25)."""
+    return folded.withColumn(
         "compression_ratio",
         F.when(
             F.col("n_vision_tokens") > 0,
             F.col("n_text_tokens").cast("double") / F.col("n_vision_tokens"),
         ).otherwise(F.lit(0.0)),
-    )
-    result = result.withColumn("digest", F.sha2(F.encode(F.col("text"), "UTF-8"), 256))
-    return result
+    ).withColumn("digest", F.sha2(F.encode(F.col("text"), "UTF-8"), 256))
+
+
+# ---------------------------------------------------------------------------
+# The flagship plan — one Python stage per document
+# ---------------------------------------------------------------------------
+
+
+def extract_documents(docs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
+    """documents → extracted(url, raw_text, text, spans, page_dims, n_pages,
+    n_vision_tokens, n_text_tokens, compression_ratio, digest), one row per
+    input row.
+
+    Byte-identical per row to ``oracle.runner.extract_url`` (pytest gate).
+    """
+
+    def fold_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        kernel = _get_kernel()
+        for pdf in batches:
+            yield _folded_frame(
+                [
+                    # null/bytes normalization happens inside the shared kernel
+                    (url, *fold_document(
+                        (
+                            (rec.page_no, rec.width, rec.height, kernel.extract_page(rec))
+                            for rec in kernel.split_pages(html)
+                        ),
+                        cfg,
+                    ))
+                    for url, html in zip(pdf["url"], pdf["html"])
+                ]
+            )
+
+    src = spread_input(docs.select("url", "html"))
+    return _with_metrics(src.mapInPandas(fold_batches, FOLDED_SCHEMA))
+
+
+# ---------------------------------------------------------------------------
+# Giant-document lane — page-granular extraction, the same fold
+# ---------------------------------------------------------------------------
+
+PAGES_SCHEMA = T.StructType(
+    [
+        T.StructField("doc", T.LongType()),
+        T.StructField("url", T.StringType()),
+        T.StructField("page_no", T.IntegerType()),
+        T.StructField("seq", T.IntegerType()),
+        T.StructField("width", T.IntegerType()),
+        T.StructField("height", T.IntegerType()),
+        T.StructField("page_html", T.StringType()),
+        T.StructField("degenerate", T.BooleanType()),
+    ]
+)
+
+
+def _split_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    kernel = _get_kernel()
+    for pdf in batches:
+        yield pd.DataFrame.from_records(
+            [
+                (doc, url, rec.page_no, seq, rec.width, rec.height, rec.html, rec.degenerate)
+                for doc, url, html in zip(pdf["doc"], pdf["url"], pdf["html"])
+                for seq, rec in enumerate(kernel.split_pages(html))
+            ],
+            columns=[f.name for f in PAGES_SCHEMA.fields],
+        )
 
 
 @F.pandas_udf(T.StringType())
@@ -431,40 +261,44 @@ def page_extract_udf(it: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
         )
 
 
-def extract_documents_paged(
-    docs: DataFrame,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    page_partitions: int | None = None,
-) -> DataFrame:
+def extract_documents_paged(docs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
     """Page-granular variant for the giant-document regime (SURVEY.md §4.1).
 
-    The fused path distributes work at doc granularity — correct when docs
-    are bounded (web pages, ≤~40 sections). When single documents are
+    The flagship path distributes work at doc granularity — correct when
+    docs are bounded (web pages, ≤~40 sections). When single documents are
     enormous (book-length PDFs: thousands of pages), one doc must not pin
     one task, so this path splits FIRST, shuffles pages by the salted page
     key (an explicit skew spread — AQE cannot rebalance UDF-stage work),
-    extracts page-at-a-time, then rejoins the shared assembly downstream.
-    Byte-identical to ``extract_documents`` (pytest gate); costs one extra
-    shuffle of page html + one extra Python stage, which is why it is not
-    the default.
+    extracts page-at-a-time, then regroups each document's pages and runs
+    the same ``fold_document``. The regroup key is a per-input-row id, not
+    the url, so duplicate and NULL urls keep one row each. Same schema and
+    bytes as ``extract_documents`` (pytest gate); costs two page shuffles
+    and two more Python stages, which is why it is not the default.
     """
-    spark = docs.sparkSession
-    if page_partitions is None:
-        page_partitions = spark.sparkContext.defaultParallelism
-
-    pages = split_to_pages(docs)
+    n = docs.sparkSession.sparkContext.defaultParallelism
+    pages = docs.select(
+        F.monotonically_increasing_id().alias("doc"), "url", "html"
+    ).mapInPandas(_split_batches, PAGES_SCHEMA)
     # salted page-key spread: pages of one giant doc scatter across tasks
-    pages = pages.repartition(
-        page_partitions, F.pmod(F.hash("url", "page_no"), F.lit(page_partitions * 8))
-    )
+    pages = pages.repartition(n, F.pmod(F.hash("doc", "seq"), F.lit(n * 8)))
     pages = pages.withColumn(
         "raw",
         page_extract_udf(F.struct("page_no", "width", "height", "page_html", "degenerate")),
     ).drop("page_html", "degenerate")
-    return _assemble_pages(pages, cfg, page_partitions)
 
+    def fold_groups(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("seq")
+        folded = fold_document(
+            zip(pdf["page_no"].tolist(), pdf["width"].tolist(),
+                pdf["height"].tolist(), pdf["raw"].tolist()),
+            cfg,
+        )
+        return _folded_frame([(pdf["url"].iloc[0], *folded)])
 
-def _page_sep() -> str:
-    from deepseek_ocr_spark.config import PAGE_SEP
-
-    return PAGE_SEP
+    # Explicit REPARTITION_BY_NUM on the regroup key, which the groupBy
+    # then reuses: an ENSURE_REQUIREMENTS exchange would let AQE's byte-
+    # based coalescing shrink the Python fold stage to one task (observed).
+    folded = pages.repartition(n, "doc").groupBy("doc").applyInPandas(
+        fold_groups, FOLDED_SCHEMA
+    )
+    return _with_metrics(folded)

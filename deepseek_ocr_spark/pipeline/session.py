@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def build_session(
@@ -57,3 +57,16 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def spread_input(df: DataFrame) -> DataFrame:
+    """Round-robin spread of a narrow scan across the cluster before a
+    map-heavy stage. A well-laid-out production table has thousands of
+    splits and this is a no-op; a single-file input would otherwise run the
+    whole zero-shuffle stage after it in ONE task (observed). The one input
+    spread rule of the engine: extraction and the per-doc sketch operators
+    all call it."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < par:
+        return df.repartition(par)
+    return df

@@ -8,10 +8,12 @@ which directly provides the north_rule checkpoint/replay semantics
 replays, the manifest dedupes).
 
 ``foreachBatch`` (rather than a fully-declarative streaming plan) because
-the extraction plan contains a groupBy assembly + doc-finalize UDF, which is
-the documented pattern for reusing a batch plan per micro-batch. Late data /
-event-time windows are N/A: warc_ts is data, not processing time
-(SURVEY.md §2.9).
+each micro-batch is a two-sink manifest commit: the manifest anti-join that
+drops already-committed urls, then ``commit_run``'s extracted-rows and
+manifest appends. A declarative stream has one sink per query, so the
+commit protocol would not fit in it; the extraction plan itself is one
+per-document mapInPandas and would stream as is. Late data / event-time
+windows are N/A: warc_ts is data, not processing time (SURVEY.md §2.9).
 """
 
 from __future__ import annotations

@@ -10,6 +10,25 @@ from deepseek_ocr_spark.oracle.runner import run_oracle
 from deepseek_ocr_spark.pipeline.extract_job import extract_documents
 
 
+SPAN_KEYS = ("label", "x1", "y1", "x2", "y2", "px1", "py1", "px2", "py2", "page_no", "ord")
+COLUMNS = (
+    "url", "raw_text", "text", "spans", "page_dims", "n_pages",
+    "n_vision_tokens", "n_text_tokens", "compression_ratio", "digest",
+)
+
+
+def canon_row(r: dict) -> tuple:
+    """One extracted row — Spark ``asDict(recursive=True)`` or oracle dict —
+    as a hashable tuple of every output column, in COLUMNS order."""
+    return (
+        r["url"], r["raw_text"], r["text"],
+        tuple(tuple(s[k] for k in SPAN_KEYS) for s in r["spans"]),
+        tuple((d["page_no"], d["width"], d["height"]) for d in r["page_dims"]),
+        r["n_pages"], r["n_vision_tokens"], r["n_text_tokens"],
+        r["compression_ratio"], r["digest"],
+    )
+
+
 @pytest.fixture(scope="module")
 def spark_vs_oracle(spark, docs_df):
     rows = gen_documents(60)
@@ -50,11 +69,10 @@ def test_counters_match(spark_vs_oracle):
 
 
 def test_spans_match(spark_vs_oracle):
-    keys = ("label", "x1", "y1", "x2", "y2", "px1", "py1", "px2", "py2", "page_no", "ord")
     oracle, got = spark_vs_oracle
     for u in oracle:
-        want = [tuple(s[k] for k in keys) for s in oracle[u]["spans"]]
-        have = [tuple(s[k] for k in keys) for s in got[u]["spans"]]
+        want = [tuple(s[k] for k in SPAN_KEYS) for s in oracle[u]["spans"]]
+        have = [tuple(s[k] for k in SPAN_KEYS) for s in got[u]["spans"]]
         assert have == want, u
 
 
@@ -135,7 +153,7 @@ def test_region_images_side_output(spark, docs_df):
 def test_tile_plan_expr_agrees_with_kernel(spark):
     """The zero-shuffle fold expression == the Python kernel on a dim sweep."""
     from deepseek_ocr_spark.kernels.tiling import tile_plan
-    from deepseek_ocr_spark.pipeline.extract_job import tile_plan_expr
+    from deepseek_ocr_spark.operators.tiling_relational import tile_plan_expr
     from pyspark.sql import functions as F
 
     dims = [(w, h) for w in range(100, 4100, 379) for h in range(100, 4100, 379)]
@@ -163,15 +181,20 @@ def test_relational_tile_plan_agrees_with_kernel(spark):
 
 
 def test_paged_variant_byte_identity(spark, docs_df):
-    """The giant-doc page-granular path produces identical bytes."""
+    """The giant-doc page-granular path matches the oracle on every output
+    column, and its schema is the flagship path's — two lanes of one
+    operator must not drift."""
     from deepseek_ocr_spark.pipeline.extract_job import extract_documents_paged
 
-    oracle = {r["url"]: r for r in run_oracle(gen_documents(60))}
-    got = {r["url"]: r for r in extract_documents_paged(docs_df).collect()}
+    paged = extract_documents_paged(docs_df)
+    assert paged.schema == extract_documents(docs_df).schema
+    assert tuple(paged.columns) == COLUMNS
+    oracle = {r["url"]: canon_row(r) for r in run_oracle(gen_documents(60))}
+    got = {r["url"]: canon_row(r.asDict(recursive=True)) for r in paged.collect()}
     assert set(got) == set(oracle)
     for u in oracle:
-        assert got[u]["text"] == oracle[u]["text"], u
-        assert got[u]["n_vision_tokens"] == oracle[u]["n_vision_tokens"], u
+        for col, have, want in zip(COLUMNS, got[u], oracle[u]):
+            assert have == want, (u, col)
 
 
 def test_layouts_doc_assembly(spark, docs_df):

@@ -8,7 +8,9 @@ Rules:
 - no CartesianProduct — cross joins are only legal against broadcast
   literals (they compile to BroadcastNestedLoopJoin);
 - every documents/lineitem parquet scan prunes columns (ReadSchema must not
-  list the full table width when the query touches a subset).
+  list the full table width when the query touches a subset);
+- the flagship extraction is ONE Python stage and no shuffle beyond the
+  optional input spread.
 """
 
 import re
@@ -78,3 +80,17 @@ def test_ivf_registry_query_reads_materialized_index(spark):
     assert "BroadcastNestedLoopJoin" not in plan, (
         "query-time plan still builds the index inline"
     )
+
+
+def test_extract_pipeline_is_one_python_stage(spark):
+    """extract_documents adds exactly one MapInPandas to its input's plan
+    (split → extract → fold per document), no scalar Arrow UDF hop, and no
+    exchange: the registry query's only Exchange is the input spread of its
+    driver-table derivation (which has its own MapInPandas, to_html)."""
+    from deepseek_ocr_spark.entry_queries import docs_from_driver_table
+
+    plan = _plan(QUERIES["extract_pipeline"](spark, SF_DIR))
+    source = _plan(docs_from_driver_table(spark, SF_DIR))
+    assert plan.count("MapInPandas") == source.count("MapInPandas") + 1, plan
+    assert "ArrowEvalPython" not in plan, plan
+    assert plan.count("Exchange") <= 1, plan

@@ -2,6 +2,7 @@
 kernel): malformed html, empty bytes, non-UTF8, unbalanced divs — the Spark
 pipeline must agree with the oracle on all of them, never crash."""
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from deepseek_ocr_spark.kernels.tiling import tile_plan
@@ -174,6 +175,33 @@ def test_null_html_rows(spark):
     got = {r["url"]: r for r in extract_documents(docs).collect()}
     assert got["u://null"]["text"] == extract_url("u://null", None)["text"]
     assert "hi" in got["u://ok"]["text"]
+
+
+@pytest.mark.parametrize("lane", ["extract_documents", "extract_documents_paged"])
+def test_duplicate_and_null_urls_one_row_per_input_row(spark, lane):
+    """Two rows sharing a url with different html, and two NULL-url rows:
+    every input row gets its own output row, as in the oracle — the url is
+    data, not a grouping key."""
+    from collections import Counter
+
+    from deepseek_ocr_spark.oracle.runner import run_oracle
+    from deepseek_ocr_spark.pipeline import extract_job
+    from tests.test_byte_identity import canon_row
+
+    rows = [
+        ("u://same", b'<div class="page" data-page="0"><p data-bbox="1,2,300,40">first</p></div>'),
+        ("u://same", b'<div class="page" data-page="0"><h1>second</h1></div>'
+                     b'<div class="page" data-page="1"><p>more pages</p></div>'),
+        (None, b"<p>orphan one</p>"),
+        (None, b"<p>orphan two</p>"),
+    ]
+    docs = spark.createDataFrame(rows, "url string, html binary")
+    got = Counter(
+        canon_row(r.asDict(recursive=True))
+        for r in getattr(extract_job, lane)(docs).collect()
+    )
+    want = Counter(canon_row(r) for r in run_oracle([{"url": u, "html": h} for u, h in rows]))
+    assert got == want
 
 
 def test_missing_query_vec_id_clear_error(spark):

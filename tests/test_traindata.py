@@ -4,6 +4,7 @@ DuckDB plus semantic invariants the sf-corpus parity gate can't exercise
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 from deepseek_ocr_spark.operators import traindata
 from tests.test_entry_queries import _value_hash
@@ -212,3 +213,27 @@ def test_dsir_topk_plan_is_take_ordered(spark):
     )
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
+
+
+def test_dsir_score_rounding_matches_duckdb(spark):
+    """dsir_score's rounding (micro_round4) against the twin SQL's
+    ``round(CAST(_sq AS DOUBLE) / 1000000.0, 4)`` in DuckDB, bit for bit:
+    exact-half micro-nat sums (748450 → 0.7484 in DuckDB; Spark's
+    ``F.round(x, 4)`` said 0.7485), small negatives whose result is -0.0,
+    and ordinary values."""
+    sq = [748450, 5, -5, -26, 0, 1, 2**40 + 50, -(2**40) - 50]
+    sq += [k * 100 + 50 for k in range(-2000, 2000)]
+    sq += [k * 37 + 11 for k in range(-2000, 2000)]
+    got = {
+        r["sq"]: r["score"]
+        for r in spark.createDataFrame([(v,) for v in sq], "sq long")
+        .select("sq", traindata.micro_round4(F.col("sq")).alias("score"))
+        .collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (sq BIGINT)")
+    con.executemany("INSERT INTO t VALUES (?)", [(v,) for v in sq])
+    want = dict(con.sql("SELECT sq, round(CAST(sq AS DOUBLE) / 1000000.0, 4) FROM t").fetchall())
+    assert got[748450] == 0.7484
+    mismatch = [(v, got[v], want[v]) for v in sq if repr(got[v]) != repr(want[v])]
+    assert mismatch == []
